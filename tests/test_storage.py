@@ -264,3 +264,86 @@ def test_journal_false_update_delete_on_empty_table(spark, tmp_path):
     assert table.update_fields(_kv(spark, [(1, "x")]), ["v"])["modifies"] == 0
     assert table.delete(_kv(spark, [(1, "x")]).select("k"))["deletes"] == 0
     assert table.read().count() == 0
+
+
+def _parquet_files(root: str, version: int) -> dict[str, int]:
+    """bucket dir -> number of parquet files it holds in ``version``."""
+    vdir = os.path.join(root, "data", f"v={version}")
+    return {
+        d: sum(f.endswith(".parquet") for f in os.listdir(os.path.join(vdir, d)))
+        for d in _bucket_dirs(root, version)
+    }
+
+
+def test_merge_writes_one_file_per_touched_bucket(spark, tmp_path):
+    """Every merge writes exactly one parquet file per touched bucket it
+    leaves non-empty — the read side then opens one file per bucket."""
+    root = str(tmp_path / "t")
+    table = KeyedTable(spark, root, ["k"], KV_SCHEMA, n_buckets=8)
+    # several input partitions, so one file per bucket is the merge's doing
+    table.upsert(_kv(spark, [(i, f"x{i}") for i in range(200)]).repartition(5))
+    files = _parquet_files(root, 0)
+    assert len(files) == 8 and set(files.values()) == {1}, files
+
+    table.merge(
+        puts=_kv(spark, [(i, "y") for i in range(0, 200, 7)]).repartition(3),
+        deletes=_kv(spark, [(i, None) for i in range(1, 200, 11)]).select("k"),
+    )
+    files = _parquet_files(root, 1)
+    assert files and set(files.values()) == {1}, files
+    table.update_fields(_kv(spark, [(5, "u"), (6, "u")]), ["v"])
+    files = _parquet_files(root, 2)
+    assert 1 <= len(files) <= 2 and set(files.values()) == {1}, files
+
+
+def test_put_with_adds_and_removals_writes_one_version(spark, tmp_path):
+    """PUT /preferences applies its adds and removals as one table
+    version, and that version's journal holds both its INSERT and its
+    REMOVE rows; a no-op PUT writes no version."""
+    from tv_event_streaming_spark.operators.preferences import (
+        PREF_KEY,
+        set_user_preferences,
+    )
+    from tv_event_streaming_spark.schemas import USER_PREF_SCHEMA
+
+    table = KeyedTable(spark, str(tmp_path / "prefs"), PREF_KEY, USER_PREF_SCHEMA)
+    assert set_user_preferences(table, "u1", ["1", "2"], ["4"]) == {"adds": 3, "deletes": 0}
+    assert table.current_version() == 0
+    r = set_user_preferences(table, "u1", ["2", "3"], ["5"])
+    assert r == {"adds": 2, "deletes": 2}
+    assert table.current_version() == 1
+    got = {
+        (row.event_name, row.kind, row.pref_id)
+        for row in table.read_changes().filter(F.col("version") == 1).collect()
+    }
+    assert got == {
+        ("INSERT", "source", "3"),
+        ("INSERT", "genre", "5"),
+        ("REMOVE", "source", "1"),
+        ("REMOVE", "genre", "4"),
+    }
+    assert set_user_preferences(table, "u1", ["2", "3"], ["5"]) == {"adds": 0, "deletes": 0}
+    assert table.current_version() == 1
+
+
+@pytest.mark.parametrize("journal", [True, False])
+def test_key_put_and_deleted_in_one_merge_is_deleted(spark, tmp_path, journal):
+    """A key that is both put and deleted in one call is deleted (deletes
+    win): an existing key is REMOVEd with its old image, a new key is
+    never created."""
+    table = KeyedTable(
+        spark, str(tmp_path / "t"), ["k"], KV_SCHEMA, n_buckets=4, journal=journal
+    )
+    table.upsert(_kv(spark, [(1, "a"), (2, "b")]))
+    r = table.merge(
+        puts=_kv(spark, [(1, "new"), (2, "B"), (3, "c"), (4, "d")]),
+        deletes=_kv(spark, [(1, None), (3, None)]).select("k"),
+    )
+    assert r == {"version": 1, "inserts": 1, "modifies": 1, "deletes": 1}
+    assert {(row.k, row.v) for row in table.read().collect()} == {(2, "B"), (4, "d")}
+    if journal:
+        got = {
+            (row.event_name, row.k, row.v)
+            for row in table.read_changes().filter(F.col("version") == 1).collect()
+        }
+        assert got == {("REMOVE", 1, "a"), ("MODIFY", 2, "B"), ("INSERT", 4, "d")}

@@ -1,11 +1,12 @@
 """Model-based fuzzing of the KeyedTable MERGE sink (S6/S7/ST3).
 
-Random operation sequences — upsert / field-level update / delete over
-a small key space, with natural redeliveries (identical batches recur),
-empty batches, duplicate keys inside one batch, and deletes/updates of
-nonexistent keys — are applied both to a KeyedTable and to a plain
-Python dict model of the reference's DynamoDB semantics. After the
-sequence, three invariants must hold exactly:
+Random operation sequences — upsert / field-level update / delete /
+mixed put+delete merge over a small key space, with natural
+redeliveries (identical batches recur), empty batches, duplicate keys
+inside one batch, and deletes/updates of nonexistent keys — are
+applied both to a KeyedTable and to a plain Python dict model of the
+reference's DynamoDB semantics. After the sequence, three invariants
+must hold exactly:
 
 1. ``read()`` equals the model (idempotent keyed puts, fetch-then-update
    field merges, keyed deletes);
@@ -41,14 +42,18 @@ SCHEMA = T.StructType(
     ]
 )
 
-# (kind, keys, tag): tag comes from a tiny space so hypothesis
+# (kind, keys, tag, del_keys): tag comes from a tiny space so hypothesis
 # naturally generates REDELIVERIES — the same (kind, keys, tag) batch
 # applied again later must be a no-op state-wise (MODIFY to the same
 # image) exactly like the reference consumer's at-least-once input.
+# ``del_keys`` are the deletes of a "merge" op (puts = ``keys``); the
+# two lists may overlap, and a key in both is deleted.
+_keys = st.lists(st.integers(0, 7), min_size=0, max_size=5)
 _op = st.tuples(
-    st.sampled_from(["upsert", "update", "delete"]),
-    st.lists(st.integers(0, 7), min_size=0, max_size=5),
+    st.sampled_from(["upsert", "update", "delete", "merge"]),
+    _keys,
     st.integers(0, 2),
+    _keys,
 )
 
 
@@ -61,15 +66,14 @@ _op = st.tuples(
 def test_keyed_table_matches_model_on_random_op_sequences(
     spark, tmp_path_factory, ops, journal
 ):
-    """``journal`` is drawn too: the journal=False merge paths compute
-    their counts on a different plan (marker-column Observation riding
-    the data write) and must satisfy the same state + counts model;
-    the journal-replay invariant only applies when there IS a journal."""
+    """``journal`` is drawn too: a journal=False table must satisfy the
+    same state + counts model; the journal-replay invariant only applies
+    when there IS a journal."""
     root = str(tmp_path_factory.mktemp("ktfuzz") / "t")
     kt = KeyedTable(spark, root, ["k"], SCHEMA, n_buckets=4, journal=journal)
     model: dict[int, tuple[str | None, str | None]] = {}
 
-    for kind, keys, tag in ops:
+    for kind, keys, tag, del_keys in ops:
         if kind == "upsert":
             rows = [(k, f"v{tag}", f"e{tag}") for k in keys]
             got = kt.upsert(spark.createDataFrame(rows, SCHEMA))
@@ -90,7 +94,7 @@ def test_keyed_table_matches_model_on_random_op_sequences(
             for k in uniq & set(model):
                 model[k] = (f"u{tag}", model[k][1])
             assert got["modifies"] == expect_mod, (got, expect_mod, ops)
-        else:
+        elif kind == "delete":
             rows = [(k, None, None) for k in keys]
             got = kt.delete(spark.createDataFrame(rows, SCHEMA))
             uniq = set(keys)
@@ -98,6 +102,26 @@ def test_keyed_table_matches_model_on_random_op_sequences(
             for k in uniq:
                 model.pop(k, None)
             assert got["deletes"] == expect_del, (got, expect_del, ops)
+        else:
+            got = kt.merge(
+                puts=spark.createDataFrame(
+                    [(k, f"m{tag}", f"e{tag}") for k in keys], SCHEMA
+                ),
+                deletes=spark.createDataFrame(
+                    [(k, None, None) for k in del_keys], SCHEMA
+                ),
+            )
+            dels, puts = set(del_keys), set(keys) - set(del_keys)
+            expect = {
+                "inserts": len(puts - set(model)),
+                "modifies": len(puts & set(model)),
+                "deletes": len(dels & set(model)),
+            }
+            for k in puts:
+                model[k] = (f"m{tag}", f"e{tag}")
+            for k in dels:
+                model.pop(k, None)
+            assert {k: got[k] for k in expect} == expect, (got, expect, ops)
 
     # 1. table state == model
     state = {(r.k): (r.val, r.extra) for r in kt.read().collect()}

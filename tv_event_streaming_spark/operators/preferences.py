@@ -54,10 +54,11 @@ def set_user_preferences(
     prefs_table, user_id: str, sources: list[str], genres: list[str]
 ) -> dict[str, int]:
     """The full PUT /preferences mutation against a KeyedTable
-    (preferences.py:128-175): read current, compute the delta, apply adds
-    as MERGE-inserts and removals as keyed deletes. Returns the counts;
-    ``{adds: 0, deletes: 0}`` is the reference's no-op 204 early-exit
-    (preferences.py:148-150) — no table version is written."""
+    (preferences.py:128-175): read current, compute the delta, and apply
+    its adds and removals as ONE table version (one ``merge`` call).
+    Returns the counts the merge observed; ``{adds: 0, deletes: 0}`` is
+    the reference's no-op 204 early-exit (preferences.py:148-150) — no
+    table version is written."""
     spark = prefs_table.spark
     rows = [(user_id, "source", s) for s in sources] + [
         (user_id, "genre", g) for g in genres
@@ -66,18 +67,12 @@ def set_user_preferences(
 
     new = spark.createDataFrame(rows, USER_PREF_SCHEMA)
     old = prefs_table.read().filter(F.col("user_id") == user_id)
-    delta = prefs_delta(old, new).cache()
-    try:
-        adds = delta.filter(F.col("op") == "add").select(*PREF_KEY)
-        dels = delta.filter(F.col("op") == "delete").select(*PREF_KEY)
-        n_add, n_del = adds.count(), dels.count()
-        if n_add:
-            prefs_table.upsert(adds)
-        if n_del:
-            prefs_table.delete(dels)
-        return {"adds": n_add, "deletes": n_del}
-    finally:
-        delta.unpersist()
+    delta = prefs_delta(old, new)
+    got = prefs_table.merge(
+        puts=delta.filter(F.col("op") == "add").select(*PREF_KEY),
+        deletes=delta.filter(F.col("op") == "delete").select(*PREF_KEY),
+    )
+    return {"adds": got["inserts"], "deletes": got["deletes"]}
 
 
 def apply_prefs_delta(old: DataFrame, new: DataFrame) -> DataFrame:

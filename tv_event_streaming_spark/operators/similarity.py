@@ -2547,7 +2547,6 @@ def opq_permutation(
     embeddings: DataFrame,
     n_sub: int = 8,
     vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> list[int]:
     """Variance-balancing dimension permutation: ``perm[new_pos] =
     old_dim``. Per-dim variance is computed EXACTLY — quantized int64
@@ -2617,7 +2616,7 @@ def cosine_topk_pq_opq(
     the audited PQ plan."""
     if perm is None:
         perm = opq_permutation(
-            nonzero_norm(embeddings, vec_col), n_sub, vec_col, id_col
+            nonzero_norm(embeddings, vec_col), n_sub, vec_col
         )
     rotated = apply_permutation(embeddings, perm, vec_col)
     return cosine_topk_pq_rerank(

@@ -82,22 +82,12 @@ def start_consumer(
     index: KeyedTable,
     checkpoint_dir: str,
     max_files_per_trigger: int = 32,
-    stage_timings: dict | None = None,
 ):
     """Start the consumer with an availableNow trigger (drain everything
     pending, then stop — the test/batch form; drop the trigger for a
     continuous deployment). ``max_files_per_trigger`` bounds micro-batch
     size (the Kinesis shard-batch knob); the crash-restart fuzz sets it
-    to 1 so every bus file is its own micro-batch boundary.
-
-    ``stage_timings``: pass a dict to accumulate per-stage wall seconds
-    across micro-batches (keys ``materialize_sec`` — decode+dedup into
-    the cache via an explicit count that only runs when profiling —
-    ``titles_merge_sec``, ``index_merge_sec``, ``n_batches``,
-    ``rows``); used by tools/profile_consumer.py to attribute the
-    cascade's consumer leg."""
-    import time  # noqa: PLC0415
-
+    to 1 so every bus file is its own micro-batch boundary."""
     wire = (
         spark.readStream.schema(WIRE_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -108,32 +98,17 @@ def start_consumer(
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         batch = batch_df.dropDuplicates(["id"]).cache()  # A2, reused twice below
         try:
-            t0 = time.perf_counter()
-            if stage_timings is not None:
-                # profiling only: materialize decode+dedup into the cache
-                # so the MERGE timings below don't absorb the scan
-                n_rows = batch.count()
-            t1 = time.perf_counter()
-            records = _to_title_records(batch)
-            titles.upsert(records)
-            t2 = time.perf_counter()
+            titles.upsert(_to_title_records(batch))
             # J2 — the index rows are deliberately insert-only/immutable
             # (reference consumer.py:70-71); upsert of identical keys is a
-            # no-op MODIFY, preserving that semantics idempotently.
+            # no-op MODIFY, preserving that semantics idempotently. The
+            # index MERGE is the cascade's big one (source×genre rows per
+            # title): one pass over the batch and the touched buckets,
+            # one file per bucket, no journal.
             idx = index_from_arrays(
                 batch.select(F.col("id").alias("title_id"), "source_ids", "genre_ids")
             )
-            # when profiling, also split the index MERGE into its phases
-            # (probe/touched/publish — see KeyedTable.upsert timings)
-            index.upsert(idx, timings=stage_timings)
-            if stage_timings is not None:
-                t3 = time.perf_counter()
-                s = stage_timings
-                s["materialize_sec"] = s.get("materialize_sec", 0.0) + (t1 - t0)
-                s["titles_merge_sec"] = s.get("titles_merge_sec", 0.0) + (t2 - t1)
-                s["index_merge_sec"] = s.get("index_merge_sec", 0.0) + (t3 - t2)
-                s["n_batches"] = s.get("n_batches", 0) + 1
-                s["rows"] = s.get("rows", 0) + n_rows
+            index.upsert(idx)
         finally:
             batch.unpersist()
 

@@ -3,22 +3,27 @@
 Spark has no in-place update without a table format (SURVEY.md §7
 phase 2). This layer gives the reference's DynamoDB semantics —
 idempotent keyed puts (consumer.py:58-89), nested-field updates
-(enrichment.py:114-125), and a NEW_IMAGE change stream
-(uktv-event-streaming-app.yaml:55-56) — on plain parquet:
+(enrichment.py:114-125), keyed deletes (preferences.py:153-161) and a
+NEW_IMAGE change stream (uktv-event-streaming-app.yaml:55-56) — on
+plain parquet:
 
 - the key space is hash-partitioned into ``n_buckets`` stable buckets
   (``pmod(xxhash64(keys), n)``); a MERGE rewrites ONLY the buckets its
   batch touches — O(batch ∪ touched buckets), never O(table);
-- each MERGE writes new immutable bucket directories under
-  ``data/v=N/`` and publishes a version MANIFEST mapping every bucket to
-  the version directory that last wrote it, then flips the ``_CURRENT``
-  pointer (atomic rename) — readers always see a consistent snapshot
-  stitched from per-bucket paths;
-- every MERGE appends INSERT/MODIFY/REMOVE rows (full new image +
-  version) to ``_changes/``, which Structured Streaming can tail as a
-  file source — the Delta CDF stand-in;
-- merge counts come from ``DataFrame.observe`` metrics collected during
-  the journal write itself — no extra count jobs per merge.
+- every MERGE is one pass: the bucket-tagged batch and the current rows
+  of its touched buckets meet in ONE exchange clustered by bucket,
+  grouped on (bucket, key); that step classifies each key as untouched,
+  INSERT, MODIFY or REMOVE and picks its new image;
+- the data write of that frame makes exactly one parquet file per
+  touched bucket under ``data/v=N/``, then a version MANIFEST maps
+  every bucket to the version directory that last wrote it and the
+  ``_CURRENT`` pointer flips (atomic rename) — readers always see a
+  consistent snapshot stitched from per-bucket paths;
+- the INSERT/MODIFY/REMOVE rows (full image + version) of the same
+  frame are appended to ``_changes/``, which Structured Streaming can
+  tail as a file source — the Delta CDF stand-in;
+- merge counts come from one ``DataFrame.observe`` on the data write,
+  for every table — no extra count jobs per merge.
 
 On a real deployment this class is replaced wholesale by Delta/Iceberg
 ``MERGE INTO`` + change data feed; the pipeline code above it doesn't
@@ -37,6 +42,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 BUCKET_COL = "bucket__"
+_OP = "op__"
+# row tags of one merge, one bit each: a current table row, a batch
+# image (put or field update), a batch delete
+_CUR, _NEW, _DEL = 1, 2, 4
+_COUNTS = ("inserts", "modifies", "deletes")
 
 
 class KeyedTable:
@@ -52,11 +62,9 @@ class KeyedTable:
         """``journal=False`` turns off the NEW_IMAGE change journal for
         tables no CDC consumer tails (VERDICT r7 #5: the consumer's
         INDEX table has no stream_changes reader — only ``titles``
-        feeds the enrichment cascade — and at a 50 M-row merge the
-        journal's full-image parquet append was ~half the remaining
-        merge wall). Merge counts then ride the DATA write via a
-        marker-column Observation instead of the journal write, so the
-        return contract is unchanged; :meth:`stream_changes` /
+        feeds the enrichment cascade). It only skips the journal
+        append: merge counts ride the data write for every table, so
+        the return contract is unchanged; :meth:`stream_changes` /
         :meth:`read_changes` raise, keeping a silent no-op journal from
         masquerading as an empty-but-live one."""
         self.spark = spark
@@ -159,287 +167,183 @@ class KeyedTable:
 
     # -- merge --------------------------------------------------------------
 
-    def _touched_buckets(self, batch: DataFrame) -> list[int]:
-        """Distinct bucket ids of a batch — bounded by ``n_buckets``
-        (this is the one driver-side collect in the merge path; it
-        returns at most n_buckets ints)."""
-        rows = batch.select(self._bucket().alias("b")).distinct().collect()
-        return sorted(r.b for r in rows)
-
-    def _publish(
-        self,
-        v: int,
-        new_state: DataFrame,
-        touched: list[int],
-        changes: DataFrame | None,
-        obs: Observation,
-        keys: tuple[str, ...] = ("inserts", "modifies", "deletes"),
-    ) -> dict[str, int]:
-        """Write touched buckets + journal, update the manifest, flip the
-        pointer, and return the observed merge counts. ``changes=None``
-        (a ``journal=False`` table) skips the journal append — the
-        caller attached ``obs`` to the ``new_state`` lineage instead,
-        so the counts ride the data write."""
-        data_dir = os.path.join(self.path, "data", f"v={v}")
-        new_state.withColumn(BUCKET_COL, self._bucket()).write.partitionBy(
-            BUCKET_COL
-        ).mode("overwrite").parquet(data_dir)
-        if changes is not None:
-            changes.write.mode("append").parquet(self.changes_dir)
-
-        manifest = self._read_manifest(v - 1)
-        for b in touched:
-            bdir = os.path.join(data_dir, f"{BUCKET_COL}={b}")
-            if os.path.isdir(bdir):
-                manifest[b] = os.path.relpath(bdir, self.path)
-            else:
-                manifest.pop(b, None)  # bucket emptied (all rows deleted)
-        self._write_manifest(v, manifest)
-        self._flip(v)
-        # Observation sums are NULL (None) when the change journal is
-        # empty — e.g. delete() of keys absent from the table, or
-        # update_fields() where no update key exists (the reference's
-        # preference-removal path tolerates removing a non-existent key).
-        got = obs.get
-        return {"version": v, **{k: int(got[k] or 0) for k in keys if k in got}}
-
-    @staticmethod
-    def _observed(changes: DataFrame, obs: Observation) -> DataFrame:
-        return changes.observe(
-            obs,
-            F.sum(F.when(F.col("event_name") == "INSERT", 1).otherwise(0)).alias("inserts"),
-            F.sum(F.when(F.col("event_name") == "MODIFY", 1).otherwise(0)).alias("modifies"),
-            F.sum(F.when(F.col("event_name") == "REMOVE", 1).otherwise(0)).alias("deletes"),
-        )
-
-    def upsert(
-        self, batch: DataFrame, timings: dict | None = None
-    ) -> dict[str, int]:
+    def upsert(self, batch: DataFrame) -> dict[str, int]:
         """MERGE: insert new keys, overwrite existing ones (the
-        reference's idempotent put). Appends the change journal.
+        reference's idempotent put). A key repeated inside the batch
+        keeps one of its rows (reference batches carry identical
+        payloads per key, consumer.py:57)."""
+        return self._counts(self.merge(puts=batch), "inserts", "modifies")
 
-        The batch is deduplicated on the key first (last-writer-wins is
-        unnecessary — reference batches carry identical payloads per key,
-        consumer.py:57). Only the buckets containing batch keys are read
-        and rewritten.
-
-        The deduped batch is persisted for the MERGE's duration: four
-        actions read it (emptiness probe, touched-bucket collect, the
-        journal write, the data write), and without the barrier each
-        re-ran the batch's upstream lineage — for the consumer's index
-        leg that lineage is a double explode + key-dedup shuffle of the
-        full exploded set, and re-running it dominated the cascade
-        (measured 2.7×: 279 s → 104 s on the 50 M-row merge, SCALE.md
-        §6e).
-
-        ``timings``: pass a dict to accumulate per-phase wall seconds
-        (profiling, tools/profile_consumer.py): ``probe_sec`` —
-        persist + emptiness probe (the dedup shuffle's map side);
-        ``touched_sec`` — dedup completion into the cache + the
-        bucket-id collect; ``publish_sec`` — touched-bucket read,
-        merge joins, data (+journal) write, manifest flip."""
-        import time  # noqa: PLC0415
-
-        t = time.perf_counter if timings is not None else None
-        batch = batch.dropDuplicates(self.key_cols).persist()
-        try:
-            t0 = t() if t else 0.0
-            if batch.isEmpty():  # empty micro-batches must not write versions
-                return {"version": self.current_version(), "inserts": 0, "modifies": 0}
-            t1 = t() if t else 0.0
-            touched = self._touched_buckets(batch)
-            if timings is not None:
-                t2 = t()
-                timings["probe_sec"] = timings.get("probe_sec", 0.0) + (t1 - t0)
-                timings["touched_sec"] = timings.get("touched_sec", 0.0) + (
-                    t2 - t1
-                )
-            current = self._read_buckets(
-                self._read_manifest(self.current_version()), touched
-            )
-            untouched = current.join(batch, self.key_cols, "left_anti")
-            v = self.current_version() + 1
-            obs = Observation()
-            if not self.journal:
-                # counts ride the DATA write: one marker left-join vs
-                # the touched buckets' keys classifies insert/modify
-                # without materializing a change frame at all. The
-                # observe node sits ABOVE the union: a CollectMetrics
-                # inside a union child whose sibling is an empty
-                # relation never delivers its metrics under foreachBatch
-                # (measured: Observation.get blocks forever on the first
-                # micro-batch, when `current` is the empty v=-1 frame).
-                marked = batch.join(
-                    current.select(*self.key_cols).withColumn(
-                        "_existing__", F.lit(True)
-                    ),
-                    self.key_cols,
-                    "left",
-                )
-                cols = [c for c in batch.columns]
-                tagged = untouched.withColumn("_m__", F.lit(1)).unionByName(
-                    marked.select(
-                        *cols,
-                        F.when(F.col("_existing__").isNotNull(), F.lit(2))
-                        .otherwise(F.lit(3))
-                        .alias("_m__"),
-                    )
-                )
-                new_state = tagged.observe(
-                    obs,
-                    F.sum(F.when(F.col("_m__") == 3, 1).otherwise(0)).alias(
-                        "inserts"
-                    ),
-                    F.sum(F.when(F.col("_m__") == 2, 1).otherwise(0)).alias(
-                        "modifies"
-                    ),
-                ).drop("_m__")
-                tp = t() if t else 0.0
-                out = self._publish(v, new_state, touched, None, obs)
-                if timings is not None:
-                    timings["publish_sec"] = timings.get("publish_sec", 0.0) + (
-                        t() - tp
-                    )
-                out.pop("deletes", None)
-                return out
-            new_state = untouched.unionByName(batch)
-            # journal classification: new key -> INSERT, existing -> MODIFY
-            inserts = batch.join(current, self.key_cols, "left_anti")
-            modifies = batch.join(
-                current.select(*self.key_cols), self.key_cols, "left_semi"
-            )
-            changes = inserts.select(
-                F.lit("INSERT").alias("event_name"), F.lit(v).cast("long").alias("version"), "*"
-            ).unionByName(
-                modifies.select(
-                    F.lit("MODIFY").alias("event_name"), F.lit(v).cast("long").alias("version"), "*"
-                )
-            )
-            tp = t() if t else 0.0
-            out = self._publish(v, new_state, touched, self._observed(changes, obs), obs)
-            if timings is not None:
-                timings["publish_sec"] = timings.get("publish_sec", 0.0) + (
-                    t() - tp
-                )
-            out.pop("deletes", None)
-            return out
-        finally:
-            batch.unpersist()
+    def delete(self, keys: DataFrame) -> dict[str, int]:
+        """Keyed delete (the preference-removal path, preferences.py:153-161);
+        absent keys are a no-op, a bucket left empty drops out of the
+        manifest."""
+        return self._counts(self.merge(deletes=keys), "deletes")
 
     def update_fields(self, updates: DataFrame, fields: list[str]) -> dict[str, int]:
         """Field-level MERGE (the reference's UpdateItem on nested paths,
         enrichment.py:114-125): for keys present in ``updates``, set only
         ``fields``; all other columns and rows unchanged. Rows in
         ``updates`` whose key doesn't exist are ignored (fetch-then-update
-        semantics). Only touched buckets are rewritten.
+        semantics)."""
+        tagged = updates.select(
+            F.lit(_NEW).alias(_OP), *self._image_cols(self.key_cols + list(fields))
+        )
+        return self._counts(self._merge(tagged, list(fields)), "modifies")
 
-        The deduped batch is persisted for the MERGE's duration, same as
-        :meth:`upsert`: the enrichment leg's updates carry a
-        stream-static join in their lineage, and the four actions here
-        (emptiness probe, touched-bucket collect, data write, journal
-        write) would each re-run it."""
-        upd_base = updates.dropDuplicates(self.key_cols).persist()
-        upd = upd_base.alias("u")
-        try:
-            if upd.isEmpty():
-                return {"version": self.current_version(), "modifies": 0}
-            touched = self._touched_buckets(upd)
-            current = self._read_buckets(
-                self._read_manifest(self.current_version()), touched
+    def merge(
+        self, puts: DataFrame | None = None, deletes: DataFrame | None = None
+    ) -> dict[str, int]:
+        """Puts and keyed deletes applied as ONE table version (the PUT
+        /preferences shape: adds and removals together). A key that is
+        both put and deleted in one call is deleted — deletes win.
+        Returns ``version``, ``inserts``, ``modifies`` and ``deletes``; a
+        call with no rows writes no version."""
+        parts = []
+        if puts is not None:
+            parts.append(
+                puts.select(F.lit(_NEW).alias(_OP), *self._image_cols(self.schema.names))
             )
-            cur = current.alias("c")
-            # one left-outer join + ONE field-merge projection list,
-            # shared by both publish paths (ADVICE r8: the journaled and
-            # no-journal branches carried byte-identical 25-line copies)
-            joined = cur.join(upd, self.key_cols, "left_outer")
-            hit = F.col(f"u.{self.key_cols[0]}").isNotNull()
-            key_sel = [F.col(f"c.{k}").alias(k) for k in self.key_cols]
-            merge_sel = [
-                (
-                    F.when(hit, F.col(f"u.{f}")).otherwise(F.col(f"c.{f}")).alias(f)
-                    if f in fields
-                    else F.col(f"c.{f}").alias(f)
-                )
-                for f in current.columns
-                if f not in self.key_cols
-            ]
-            merged = joined.select(*key_sel, *merge_sel)
-            v = self.current_version() + 1
-            obs = Observation()
-            if not self.journal:
-                # modifies = |cur ∩ upd|, observed on the data write via
-                # a marker column on the same left-outer join
-                marked = joined.select(
-                    *key_sel, *merge_sel, hit.alias("_upd__")
-                ).observe(
-                    obs,
-                    F.sum(F.when(F.col("_upd__"), 1).otherwise(0)).alias(
-                        "modifies"
-                    ),
-                )
-                out = self._publish(
-                    v, marked.drop("_upd__"), touched, None, obs
-                )
-                return {"version": out["version"], "modifies": out["modifies"]}
-            touched_keys = upd.join(cur, self.key_cols, "left_semi")
-            new_images = merged.join(
-                touched_keys.select(*self.key_cols), self.key_cols, "left_semi"
+        if deletes is not None:
+            parts.append(
+                deletes.select(F.lit(_DEL).alias(_OP), *self._image_cols(self.key_cols))
             )
-            changes = new_images.select(
-                F.lit("MODIFY").alias("event_name"), F.lit(v).cast("long").alias("version"), "*"
-            )
-            out = self._publish(v, merged, touched, self._observed(changes, obs), obs)
-            return {"version": out["version"], "modifies": out["modifies"]}
-        finally:
-            upd_base.unpersist()
+        if not parts:
+            raise ValueError("merge() needs puts, deletes or both")
+        tagged = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+        return self._merge(tagged, None)
 
-    def delete(self, keys: DataFrame) -> dict[str, int]:
-        """Keyed delete (the preference-removal path, preferences.py:153-161).
-        Only touched buckets are rewritten; a bucket left empty drops out
-        of the manifest. The key batch is persisted for the delete's
-        duration (same multi-action lineage re-run as :meth:`upsert`)."""
-        keys = keys.persist()
+    def _image_cols(self, given: list[str]) -> list[F.Column]:
+        """The schema's columns, typed like the table (a key typed
+        differently would hash to another bucket); columns not in
+        ``given`` are NULL."""
+        return [
+            (F.col(f.name) if f.name in given else F.lit(None))
+            .cast(f.dataType)
+            .alias(f.name)
+            for f in self.schema.fields
+        ]
+
+    @staticmethod
+    def _counts(result: dict[str, int], *keys: str) -> dict[str, int]:
+        return {"version": result["version"], **{k: result[k] for k in keys}}
+
+    def _merge(self, tagged: DataFrame, fields: list[str] | None) -> dict[str, int]:
+        """The one merge pass. ``tagged`` holds the schema's columns plus
+        an ``_OP`` tag (``_NEW`` / ``_DEL``); ``fields`` set means a
+        field update: ``_NEW`` rows then carry only those fields and
+        never create a key.
+
+        The bucket-tagged batch is persisted: the distinct-bucket
+        collect (which is also the emptiness probe) and the merge both
+        read it, and without the barrier each re-ran the batch's
+        upstream lineage (for the consumer's index leg a double explode
+        of the full batch; SCALE.md §6e). The merged frame is persisted
+        too when a journal append reads it after the data write."""
+        tagged = tagged.withColumn(BUCKET_COL, self._bucket()).persist()
+        merged = None
         try:
-            if keys.isEmpty():
-                return {"version": self.current_version(), "deletes": 0}
-            touched = self._touched_buckets(keys)
-            current = self._read_buckets(
-                self._read_manifest(self.current_version()), touched
+            touched = sorted(
+                r[0] for r in tagged.select(BUCKET_COL).distinct().collect()
             )
+            if not touched:  # empty batches must not write versions
+                return {"version": self.current_version(), **dict.fromkeys(_COUNTS, 0)}
             v = self.current_version() + 1
+            current = self._read_buckets(self._read_manifest(v - 1), touched)
+            rows = current.select(
+                F.lit(_CUR).alias(_OP), *self.schema.names, self._bucket().alias(BUCKET_COL)
+            ).unionByName(tagged)
+            merged = self._classify(rows, len(touched), fields)
+            if self.journal:
+                merged.persist()
+
+            # the observe node must sit ABOVE the union: a CollectMetrics
+            # inside a union child whose sibling is an empty relation
+            # (the first merge) never delivers its metrics under
+            # foreachBatch, and Observation.get then blocks forever
             obs = Observation()
-            if not self.journal:
-                # deletes = |cur ∩ keys|, observed upstream of the
-                # surviving-row filter on one marker left-join
-                marked = current.join(
-                    # distinct(): a duplicated delete key must not fan
-                    # out current rows through the left join (the
-                    # journaled path's semi/anti joins are dupe-safe)
-                    keys.select(*self.key_cols)
-                    .distinct()
-                    .withColumn("_del__", F.lit(True)),
-                    self.key_cols,
-                    "left",
-                ).observe(
-                    obs,
-                    F.sum(
-                        F.when(F.col("_del__").isNotNull(), 1).otherwise(0)
-                    ).alias("deletes"),
-                )
-                remaining = marked.filter(F.col("_del__").isNull()).drop(
-                    "_del__"
-                )
-                out = self._publish(v, remaining, touched, None, obs)
-                return {"version": out["version"], "deletes": out["deletes"]}
-            removed = current.join(keys, self.key_cols, "left_semi")
-            remaining = current.join(keys, self.key_cols, "left_anti")
-            changes = removed.select(
-                F.lit("REMOVE").alias("event_name"), F.lit(v).cast("long").alias("version"), "*"
-            )
-            out = self._publish(v, remaining, touched, self._observed(changes, obs), obs)
-            return {"version": out["version"], "deletes": out["deletes"]}
+            event = F.col("event_name")
+            data_dir = os.path.join(self.path, "data", f"v={v}")
+            merged.observe(
+                obs,
+                F.count_if(event == "INSERT").alias("inserts"),
+                F.count_if(event == "MODIFY").alias("modifies"),
+                F.count_if(event == "REMOVE").alias("deletes"),
+            ).filter("live__").select(BUCKET_COL, *self.schema.names).write.partitionBy(
+                BUCKET_COL
+            ).mode("overwrite").parquet(data_dir)
+            if self.journal:
+                # one journal file per version: the CDC stream's
+                # maxFilesPerTrigger then counts versions, not buckets
+                merged.filter(event.isNotNull()).select(
+                    event, F.lit(v).cast("long").alias("version"), *self.schema.names
+                ).coalesce(1).write.mode("append").parquet(self.changes_dir)
+
+            manifest = self._read_manifest(v - 1)
+            for b in touched:
+                bdir = os.path.join(data_dir, f"{BUCKET_COL}={b}")
+                if os.path.isdir(bdir):
+                    manifest[b] = os.path.relpath(bdir, self.path)
+                else:
+                    manifest.pop(b, None)  # bucket emptied (all rows deleted)
+            self._write_manifest(v, manifest)
+            self._flip(v)
+            got = obs.get
+            return {"version": v, **{k: int(got[k]) for k in _COUNTS}}
         finally:
-            keys.unpersist()
+            if merged is not None:
+                merged.unpersist()
+            tagged.unpersist()
+
+    def _classify(
+        self, rows: DataFrame, n_parts: int, fields: list[str] | None
+    ) -> DataFrame:
+        """One exchange clustered by bucket, grouped on (bucket, key):
+        per key a bitmask of the row tags present plus the current and
+        the batch image, then its ``event_name`` (NULL = untouched or
+        no-op), ``live__`` (row stays in the table) and new image.
+        Deletes win over puts of the same key. Partitioning by the bucket
+        alone satisfies the (bucket, key) grouping, so the aggregate adds
+        no exchange and each touched bucket lives in exactly one task —
+        one file per bucket on write."""
+        vals = [c for c in self.schema.names if c not in self.key_cols]
+        replaced = vals if fields is None else [c for c in vals if c in fields]
+        op = F.col(_OP)
+        aggs = [F.bit_or(op).alias("ops__")]
+        if vals:
+            aggs.append(F.first(F.when(op == _CUR, F.struct(*vals)), True).alias("c__"))
+        if replaced:
+            aggs.append(F.first(F.when(op == _NEW, F.struct(*replaced)), True).alias("n__"))
+        g = rows.repartition(n_parts, BUCKET_COL).groupBy(BUCKET_COL, *self.key_cols).agg(*aggs)
+
+        def has(tag: int) -> F.Column:
+            return F.col("ops__").bitwiseAND(tag) != 0
+
+        cur, new, dele = has(_CUR), has(_NEW), has(_DEL)
+        put = new if fields is None else F.lit(False)
+        event = (
+            F.when(dele, F.when(cur, F.lit("REMOVE")))
+            .when(new & cur, F.lit("MODIFY"))
+            .when(put, F.lit("INSERT"))
+        )
+        # a REMOVE journals the old image; a put replaces every value
+        # column, a field update only ``fields`` of an existing row
+        take_new = new & ~dele
+        image = [
+            (
+                F.when(take_new, F.col(f"n__.{c}")).otherwise(F.col(f"c__.{c}"))
+                if c in replaced
+                else F.col(f"c__.{c}")
+            ).alias(c)
+            for c in vals
+        ]
+        return g.select(
+            BUCKET_COL,
+            event.alias("event_name"),
+            (~dele & (cur | put)).alias("live__"),
+            *self.key_cols,
+            *image,
+        )
 
     def _flip(self, v: int) -> None:
         tmp = self._pointer + ".tmp"
